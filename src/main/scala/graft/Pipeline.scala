@@ -1,16 +1,22 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{ExtractionResult, Lineage, Turn}
 
 /** Dataset-level extraction pipeline (SURVEY.md §3.1 Spark re-expression).
   *
-  * One job, one lineage: scan → salted repartition (hot-conversation skew
-  * control, north_rule) → mapPartitions extract → sortWithinPartitions →
-  * partitioned parquet sink + per-partition lineage rows + metrics.
-  * Resume = left-anti join against committed keys (idempotent writes
-  * keyed by (conv_id, turn_idx)).
+  * A run is a sequence of Spark jobs:
+  *  1. the results job: scan → optional salted repartition (hot-conversation
+  *     skew control, north_rule) → mapPartitions extract + lineage tracking
+  *     (one fused object pass) → sortWithinPartitions → parquet `results/`;
+  *  2. after that commit, three independent jobs run concurrently: the
+  *     per-partition `lineage/` rows gathered by the results job, and
+  *     `metrics/` and `metrics_rolling/`, both re-read from the committed
+  *     `results/`.
+  * Resume = null-safe left-anti join against committed keys (idempotent
+  * writes keyed by (conv_id, turn_idx)), re-spread over the input scan's
+  * partition count before the append's results job.
   *
   * Scale notes (100 TB / 10^12 turns):
   *  - extraction is embarrassingly parallel per turn: no shuffle is
@@ -28,6 +34,22 @@ object Pipeline {
     * (conv_id, hash(turn_idx) % Salt) so a conversation with millions of
     * turns spreads over Salt partitions instead of one. */
   val Salt = 16
+
+  /** Schema of the committed `results/` table: the engine writes it
+    * itself, so reads skip schema inference (one job per read). */
+  private val ResultsSchema = Encoders.product[ExtractionResult].schema
+
+  /** The committed `results/` table of a run rooted at `outDir`. */
+  def readResults(spark: SparkSession, outDir: String): Dataset[ExtractionResult] = {
+    import spark.implicits._
+    spark.read.schema(ResultsSchema).parquet(s"$outDir/results").as[ExtractionResult]
+  }
+
+  /** The salted repartition: key (conv_id, hash(turn_idx) % Salt), so a
+    * conversation with millions of turns spreads over Salt partitions
+    * instead of one. Two in a row collapse into the outer one. */
+  def salted(turns: Dataset[Turn], numPartitions: Int): Dataset[Turn] =
+    turns.repartition(numPartitions, col("conv_id"), pmod(hash(col("turn_idx")), lit(Salt)))
 
   def turnsSchemaDf(spark: SparkSession, path: String): Dataset[Turn] = {
     import spark.implicits._
@@ -66,22 +88,22 @@ object Pipeline {
   def extractTurns(turns: Dataset[Turn], numPartitions: Int = -1,
                    safe: Boolean = false): Dataset[ExtractionResult] = {
     import turns.sparkSession.implicits._
-    val repart =
-      if (numPartitions > 0)
-        turns.repartition(numPartitions, col("conv_id"), pmod(hash(col("turn_idx")), lit(Salt)))
-      else turns
+    val repart = if (numPartitions > 0) salted(turns, numPartitions) else turns
     val f: Turn => ExtractionResult =
       if (safe) Extractor.extractSafe else Extractor.extract
     repart.mapPartitions(_.map(f))
   }
 
-  /** Sink with per-partition lineage (SURVEY.md §7.1.7). ONE pass:
-    * lineage stats (partition id, key range, row count, wall ms) are
-    * gathered by a task-completion listener into an accumulator while
-    * the same iterators stream into the parquet writer — the expensive
-    * extraction runs exactly once. (Speculative task retries may add
-    * duplicate lineage rows; lineage is a diagnostic table, results
-    * stay exactly-once via the file committer.) */
+  /** Sink with per-partition lineage (SURVEY.md §7.1.7). The results job
+    * extracts each turn once: lineage stats (partition id, key range, row
+    * count, wall ms) are gathered from the extracted objects before the
+    * sort, in the same object pass as the extraction, and reported by a
+    * task-completion listener into an accumulator. After `results/`
+    * commits, `lineage/`, `metrics/` and `metrics_rolling/` are written by
+    * three concurrent jobs; the first failure among them is rethrown once
+    * all three have ended. (Speculative task retries may add duplicate
+    * lineage rows; lineage is a diagnostic table, results stay
+    * exactly-once via the file committer.) */
   def writeResults(results: Dataset[ExtractionResult], outDir: String): Unit =
     writeWithLineage(results, outDir, overwrite = true)
 
@@ -115,8 +137,9 @@ object Pipeline {
     import spark.implicits._
     val mode = if (overwrite) SaveMode.Overwrite else SaveMode.Append
     val acc = spark.sparkContext.collectionAccumulator[Lineage]("graft.lineage")
-    val sorted = results.sortWithinPartitions("conv_id", "turn_idx")
-    val tracked = sorted.mapPartitions { it =>
+    // tracked before the sort: count, key range and partition id do not
+    // depend on row order, and the object pass fuses with the extraction's
+    val tracked = results.mapPartitions { it =>
       val tc = org.apache.spark.TaskContext.get()
       val pid = tc.partitionId()
       val t0 = System.nanoTime()
@@ -137,17 +160,37 @@ object Pipeline {
         r
       }
     }
-    tracked.write.mode(mode).parquet(s"$outDir/results")
+    tracked.sortWithinPartitions("conv_id", "turn_idx").write.mode(mode).parquet(s"$outDir/results")
     val lineageRows: Seq[Lineage] =
       scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-    spark.createDataset(lineageRows).write.mode(mode).parquet(s"$outDir/lineage")
-    val committed = spark.read.parquet(s"$outDir/results").as[ExtractionResult]
-    metrics(committed).write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics")
-    // ship the reference's full stats surface in the job artifact, not
-    // only in specs (smartglass_ocr.py:1022-1075 keeps the last-10
-    // rolling window per type alongside the cumulative aggregates)
-    rollingKindStats(committed)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics_rolling")
+    val committed = readResults(spark, outDir)
+    concurrently(
+      () => spark.createDataset(lineageRows).write.mode(mode).parquet(s"$outDir/lineage"),
+      () => metrics(committed).write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics"),
+      // ship the reference's full stats surface in the job artifact, not
+      // only in specs (smartglass_ocr.py:1022-1075 keeps the last-10
+      // rolling window per type alongside the cumulative aggregates)
+      () => rollingKindStats(committed)
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics_rolling"))
+  }
+
+  /** Runs each body on its own new thread (so Spark local properties —
+    * job group, scheduler pool, tags — are inherited), waits for all of
+    * them, then rethrows the first failure in argument order with the
+    * others attached as suppressed. */
+  private def concurrently(bodies: (() => Unit)*): Unit = {
+    val failures = new Array[Throwable](bodies.length)
+    val threads = bodies.zipWithIndex.map { case (body, i) =>
+      val t = new Thread(() => try body() catch { case e: Throwable => failures(i) = e },
+        s"graft-sink-$i")
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
   }
 
   /** Corpus-level metrics [STR] — the reference's processing-stats
@@ -181,7 +224,12 @@ object Pipeline {
   }
 
   /** Resume from a committed snapshot: anti-join input keys against the
-    * already-written results (north_rule checkpoint semantics). */
+    * already-written results (north_rule checkpoint semantics). The join
+    * is null-safe on both keys, so a committed null key is not extracted
+    * again. The remainder keeps the input's splits, which committed files
+    * leave nearly empty, so it is re-spread with the salted key over the
+    * input scan's partition count: the task count a fresh run would use.
+    * (An input plan with an exchange runs it to learn that count.) */
   def resume(spark: SparkSession, turns: Dataset[Turn], outDir: String): Dataset[Turn] = {
     import spark.implicits._
     // Only a genuinely-missing results dir means "fresh run": any other
@@ -192,17 +240,19 @@ object Pipeline {
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(resultsPath)) return turns
     // A job SIGKILLed during its FIRST write leaves results/ holding only
-    // _temporary (no committed part files): that is still a fresh run —
-    // read.parquet on it would fail with a misleading schema-inference
-    // error and --resume could never recover (ADVICE r02). Committed =
-    // at least one non-hidden data file; the stale _temporary itself is
-    // purged later by appendResults before the append commit.
+    // _temporary (no committed part files): that is still a fresh run
+    // (ADVICE r02). Committed = at least one non-hidden data file; the
+    // stale _temporary itself is purged later by appendResults before the
+    // append commit.
     val committed = fs.listStatus(resultsPath).exists { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
     if (!committed) return turns
-    val done = spark.read.parquet(s"$outDir/results").select("conv_id", "turn_idx")
-    turns.join(done, Seq("conv_id", "turn_idx"), "left_anti").as[Turn]
+    val done = spark.read.schema("conv_id string, turn_idx int").parquet(s"$outDir/results")
+    val rest = turns.join(done,
+      turns("conv_id") <=> done("conv_id") && turns("turn_idx") <=> done("turn_idx"),
+      "left_anti").as[Turn]
+    salted(rest, turns.rdd.getNumPartitions)
   }
 }

@@ -11,11 +11,14 @@ import org.apache.spark.sql.SparkSession
   *   <input>   either a parquet path of transcript rows
   *             (conv_id, turn_idx, role, text, tool, ts) or an sf dir
   *             containing documents.parquet (auto-derived transcripts)
-  *   <outDir>  output root; writes results/, lineage/, metrics/
+  *   <outDir>  output root; writes results/, lineage/, metrics/,
+  *             metrics_rolling/
   *   --resume            anti-join against outDir/results and only
   *                       process the remainder (append)
   *   --partitions N      salted repartition width (default: keep input
-  *                       partitioning — extraction itself needs no shuffle)
+  *                       partitioning — extraction itself needs no shuffle;
+  *                       a resumed remainder is re-spread over the input's
+  *                       partition count)
   *
   * In local mode (no spark-submit master) it self-configures local[*];
   * under spark-submit the provided master/executors are untouched —
@@ -60,7 +63,7 @@ object Run {
     if (resume) Pipeline.appendResults(results, outDir)
     else Pipeline.writeResults(results, outDir)
 
-    val n = spark.read.parquet(s"$outDir/results").count()
+    val n = Pipeline.readResults(spark, outDir).count()
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"""{"job":"graft-extract","rows_total":$n,"wall_sec":$sec%.2f,"resume":$resume}""")
     spark.stop()

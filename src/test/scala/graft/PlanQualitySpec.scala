@@ -439,13 +439,23 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("Exchange"), s"no-repartition path must not shuffle:\n$p")
   }
 
+  /** Shuffle exchanges in a physical plan string (broadcasts excluded). */
+  private def shuffles(plan: String): Int = "(?<![A-Za-z])Exchange ".r.findAllIn(plan).length
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
   test("extraction plan with salting has exactly one exchange") {
     val turns = Pipeline.turnsFromDocuments(spark, sfDir)
     val p = Pipeline.extractTurns(turns, 8).toDF().queryExecution.executedPlan.toString()
-    assert(p.contains("Exchange"), s"salted path should repartition once:\n$p")
-    val n = p.linesIterator.count(_.trim.startsWith("+- Exchange")) +
-      p.linesIterator.count(_.trim.startsWith("Exchange"))
-    assert(n <= 1, s"expected exactly one Exchange, got $n:\n$p")
+    assert(shuffles(p) == 1, s"salted path should repartition once:\n$p")
+    // a resumed input: the remainder's re-spread collapses into the
+    // salted repartition (the committed keys join by broadcast)
+    val out = tempDir("graft-salt-resume")
+    Pipeline.writeResults(Pipeline.extractTurns(turns.limit(20)), out)
+    val resumed = Pipeline.extractTurns(Pipeline.resume(spark, turns, out), 8)
+    val pr = resumed.toDF().queryExecution.executedPlan.toString()
+    assert(shuffles(pr) == 1, s"resumed salted path should repartition once:\n$pr")
   }
 
   test("bucketed tables co-locate the join: no exchange on either side") {
@@ -544,15 +554,95 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(keys.distinct.length == 40, "duplicate keys after resume")
   }
 
+  test("resume is null-safe: a committed null conv_id is not extracted again") {
+    val ss = spark
+    import ss.implicits._
+    val ts = new java.sql.Timestamp(1700000000000L)
+    val turns = Seq(
+      model.Turn(null, 0, "user", "a turn without a conversation id", "plain", ts),
+      model.Turn("c1", 0, "user", "a turn with one", "plain", ts)).toDS()
+    val out = tempDir("graft-nullkey")
+    Pipeline.writeResults(Pipeline.extractTurns(turns), out)
+    for (_ <- 1 to 2)
+      Pipeline.appendResults(Pipeline.extractTurns(Pipeline.resume(spark, turns, out)), out)
+    val keys = spark.read.parquet(s"$out/results")
+      .select("conv_id", "turn_idx").as[(String, Int)].collect().toSeq
+    assert(keys.count(_ == ((null, 0))) == 1 && keys.length == 2,
+      s"expected one row per key after two resumes, got ${keys.mkString(", ")}")
+  }
+
+  test("resume re-spreads a remainder of whole committed files over the input's partition count") {
+    val ss = spark
+    import ss.implicits._
+    val ts = new java.sql.Timestamp(1700000000000L)
+    val turns = (0 until 4800).map(i => model.Turn(f"c${i / 10}%04d", i % 10, "user", s"turn $i", "plain", ts))
+    val in = tempDir("graft-resume-skew") + "/turns"
+    turns.grouped(800).foreach(_.toDS().coalesce(1).write.mode("append").parquet(in))
+    val out = tempDir("graft-resume-skew-out")
+    // a large open cost scans each of the six files as its own partition
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, (1L << 30).toString)
+    try {
+      Pipeline.writeResults(Pipeline.extractTurns(turns.take(1600).toDS()), out)
+      val all = Pipeline.turnsSchemaDf(spark, in)
+      assert(all.rdd.getNumPartitions == 6)
+      // two of the six splits are fully committed: kept as they are, the
+      // remainder would read 0/0/800/800/800/800 (max/mean 1.5)
+      val sizes = Pipeline.resume(spark, all, out).mapPartitions(it => Iterator(it.size)).collect()
+      assert(sizes.length == 6, s"remainder has ${sizes.length} partitions, the input 6")
+      assert(sizes.sum == 3200)
+      val skew = sizes.max / (sizes.sum.toDouble / sizes.length)
+      assert(skew <= 1.25, s"remainder partition sizes ${sizes.mkString("/")}: max/mean $skew")
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("results write deserializes no ExtractionResult (lineage fuses with the extraction)") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val listeners = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].listenerManager
+    listeners.register(listener)
+    try {
+      val out = tempDir("graft-fused")
+      Pipeline.writeResults(Pipeline.extractTurns(Pipeline.turnsFromDocuments(spark, sfDir)), out)
+      // listener delivery is async
+      def write = plans.toArray(Array.empty[String]).find(_.contains(s"$out/results"))
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (write.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      val p = write.getOrElse(fail("the results write was not reported"))
+      assert(p.contains("DeserializeToObject newInstance(class graft.model.Turn)"), p)
+      assert(!p.linesIterator.exists(l => l.contains("DeserializeToObject") && l.contains("ExtractionResult")),
+        s"the results write deserializes ExtractionResult rows:\n$p")
+    } finally listeners.unregister(listener)
+  }
+
+  test("a failed derived-table write is rethrown after every sink job has ended") {
+    val out = tempDir("graft-sinkfail")
+    // an overwrite clears a plain file in its way; a dangling symlink reads
+    // as absent, and no directory can be made over it
+    java.nio.file.Files.createSymbolicLink(
+      java.nio.file.Paths.get(s"$out/metrics_rolling"), java.nio.file.Paths.get(s"$out/missing/dir"))
+    val turns = Pipeline.turnsFromDocuments(spark, sfDir).limit(20)
+    val e = intercept[Exception](Pipeline.writeResults(Pipeline.extractTurns(turns), out))
+    assert(String.valueOf(e.getMessage).contains("metrics_rolling"), e.toString)
+    org.apache.spark.graftshim.ListenerBus.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a sink job was still running when the failure surfaced")
+    for (t <- Seq("results", "lineage", "metrics"))
+      assert(new java.io.File(s"$out/$t/_SUCCESS").exists(), s"$t/ did not commit")
+  }
+
   test("salting spreads a hot conversation across partitions") {
     val ss = spark
     import ss.implicits._
-    import org.apache.spark.sql.functions._
     // corpus has one deliberately hot conversation (100 turns; FIXTURES §2)
     val corpus = new GoldenParitySpec().corpus
     val hot = corpus.groupBy(_.conv_id).maxBy(_._2.size)._1
-    val ds = spark.createDataset(corpus)
-      .repartition(8, col("conv_id"), pmod(hash(col("turn_idx")), lit(Pipeline.Salt)))
+    val ds = Pipeline.salted(spark.createDataset(corpus), 8)
     val partsForHot = ds.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       it.map(t => (pid, t.conv_id))
