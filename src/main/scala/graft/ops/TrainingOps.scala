@@ -379,24 +379,11 @@ object TrainingOps {
   /** Duplicate components: connected components over the near-dup pair
     * graph, labeling every member with the smallest doc_id reachable —
     * the canonical-document selection step that turns pairwise near-dups
-    * into dedup groups. Implemented as iterative min-label propagation
-    * (each round: comp' = min(comp, min over neighbors' comp); driver
-    * loop with localCheckpoint per round to cut lineage) — converges in
-    * O(diameter) rounds; the 100 TB upgrade is the large-star/small-star
-    * variant of the same joins. Components here are tiny (near-dup
-    * clusters), so rounds ≈ 2-3. */
+    * into dedup groups. Runs on [[connectedComponentsStar]], so the round
+    * count is O(log n) whatever the length of a near-dup chain. Registered
+    * as x14 and x37 (both names stay on the driver surface), one engine
+    * under one recursive-CTE oracle. */
   def dupComponents(docs: DataFrame, threshold: Double = 0.8): DataFrame =
-    labelPropagationComponents(
-      jaccardPairsForCompose(docs, threshold))
-
-  /** Same dedup-group contract as [[dupComponents]], but through the
-    * O(log n) large-star/small-star contraction — the variant that
-    * survives adversarial graph SHAPE (long chains of pairwise
-    * near-dups) at 100 TB, where min-label propagation needs O(diameter)
-    * rounds. Registered as its own driver query (x37) so the star path
-    * carries the same recursive-CTE oracle as x14, not just the
-    * spec-level equivalence (VERDICT r03 next #4). */
-  def dupComponentsStar(docs: DataFrame, threshold: Double = 0.8): DataFrame =
     connectedComponentsStar(
       jaccardPairsForCompose(docs, threshold))
 
@@ -413,86 +400,24 @@ object TrainingOps {
     * works because persist() registers the RDD at call time). Callers
     * whose `finally` releases the checkpoint's INPUT blocks must stay
     * eager. */
-  private def trackedCheckpoint(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
+  private[graft] def trackedCheckpoint(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
     val out = df.localCheckpoint(eager)
     (out, sc.getPersistentRDDs.keySet.toSet -- before)
   }
 
-  private def releaseRdds(df: DataFrame, ids: Set[Int]): Unit = {
+  private[graft] def releaseRdds(df: DataFrame, ids: Set[Int]): Unit = {
     val live = df.sparkSession.sparkContext.getPersistentRDDs
     ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
   }
 
-  /** Iterative min-label propagation over an undirected pair list —
-    * O(diameter) rounds, right for the tiny-diameter near-dup clusters
-    * dedup produces. For adversarial graphs (long paths, giant
-    * components) use [[connectedComponentsStar]]: O(log n) rounds. */
-  def labelPropagationComponents(pairs: DataFrame): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // persisted PRE-PARTITIONED on the probe key: every round's
-    // neighbor join then reuses the cached layout instead of
-    // re-exchanging the edge list per round (guide §2.4 — two
-    // operations keyed the same way share one exchange)
-    val edges = pairs.union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .repartition(col("id_b"))
-      .persist()
-    // lazy: round 1's convergence aggregate materializes it (one job)
-    var (labels, labelsIds) = trackedCheckpoint(
-      edges.select(col("id_a").as("id")).distinct().withColumn("comp", col("id")),
-      eager = false)
-    // try/finally: on EVERY exit — including the non-convergence throw —
-    // release the edge cache and the last round's checkpoint blocks
-    // (a caller that catches the throw and keeps the session alive must
-    // not retain them for the session lifetime)
-    try {
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 50) {
-      val neighborMin = edges
-        .join(labels.select(col("id").as("id_b"), col("comp").as("ncomp")), Seq("id_b"))
-        .groupBy(col("id_a").as("id"))
-        .agg(min("ncomp").as("nmin"))
-      // ONE action per round (VERDICT r03 next #8): the checkpoint is
-      // LAZY; the changed-count aggregate is the action that
-      // materializes it, so the round runs one job instead of
-      // checkpoint-then-count's two.
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val updated = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-          (col("nmin") < col("comp")).as("chg"))
-        .localCheckpoint(false)
-      changed = updated.agg(count(when(col("chg"), 1))).head().getLong(0)
-      val newIds = sc.getPersistentRDDs.keySet.toSet -- before
-      // the superseded round's checkpoint blocks are dead now — release
-      releaseRdds(updated, labelsIds)
-      labels = updated.select("id", "comp")
-      labelsIds = newIds
-      rounds += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"labelPropagationComponents did not converge in $rounds rounds " +
-          "(graph diameter > 50) — use connectedComponentsStar (O(log n) rounds)")
-    labels.groupBy("comp")
-      .agg(count(lit(1)).as("n_docs"), max("id").as("max_doc"))
-      .select(col("comp").as("component"), col("n_docs"), col("max_doc"))
-      .orderBy("component")
-      .localCheckpoint(true) // materialized BEFORE the finally releases labels
-    } finally {
-      releaseRdds(labels, labelsIds)
-      edges.unpersist()
-    }
-  }
-
   /** Connected components via alternating large-star/small-star edge
     * contractions (Kiveris et al. 2014, "Connected Components in
-    * MapReduce and Beyond") — the documented 100 TB upgrade over
-    * [[labelPropagationComponents]] (round-2 VERDICT next #7): each round
-    * is two groupBy shuffles and the round count is O(log n) regardless
-    * of graph DIAMETER, where min-label propagation needs O(diameter)
-    * rounds (a 10^6-node path graph = 10^6 rounds vs ~20).
+    * MapReduce and Beyond") — the one connected-components engine: each
+    * round is two groupBy shuffles and the round count is O(log n)
+    * regardless of graph DIAMETER (a 10^6-node path graph takes ~20
+    * rounds, where propagating a min label hop by hop would take 10^6).
     *
     *  - large-star(u): every neighbor v > u re-attaches to
     *    m = min(Γ(u) ∪ {u});
@@ -504,13 +429,14 @@ object TrainingOps {
     * star steps are deterministic given the edge set, so an unchanged
     * distinct edge count at a fixed point stays fixed; we additionally
     * verify stability with a cheap checksum to rule out count-preserving
-    * churn). Same output contract as labelPropagationComponents. */
+    * churn). Output: one (component, n_docs, max_doc) row per component,
+    * component = its minimum id, ordered by component. */
   def connectedComponentsStar(pairs: DataFrame): DataFrame =
     connectedComponentsStarWithRounds(pairs)._1
 
   /** Same, also reporting how many large+small-star rounds ran — the
     * measurable O(log n) claim (spec: a 10k-node path converges in
-    * under ~25 rounds where min-label propagation would need 10k). */
+    * under ~25 rounds, against the path's diameter of 10k). */
   private[graft] def connectedComponentsStarWithRounds(pairs: DataFrame): (DataFrame, Int) = {
     val (labels, labelIds, rounds) = connectedComponentsStarMembersWithRounds(pairs)
     try {
@@ -535,11 +461,14 @@ object TrainingOps {
   // same way share the partitioning) instead of exchanging the edge
   // set separately for the groupBy and again for the join's probe
   // side — one full-edge-set shuffle per star step per round, gone.
+  // The count is fixed at defaultParallelism (the shingleBase
+  // convention): a repartition without one is only advisory, and AQE
+  // may then re-plan the round's exchanges per run.
   // Object-level (not local defs) so the plan record can dump one
   // round's physical tree ([[starRoundPlan]]).
   private def largeStar(e: DataFrame): DataFrame = {
     val nbrs = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      .repartition(col("u"))
+      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("u"))
     val m = nbrs.groupBy("u").agg(least(min("v"), first("u")).as("m"))
     nbrs.join(m, Seq("u"))
       .filter(col("v") > col("u"))
@@ -553,7 +482,7 @@ object TrainingOps {
     val toMin = e.select(
       greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
-      .repartition(col("u"))
+      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("u"))
     val m = toMin.groupBy("u").agg(min("v").as("m"))
     val reattached = toMin.join(m, Seq("u"))
       .filter(col("v") =!= col("m"))
@@ -566,24 +495,11 @@ object TrainingOps {
     * frame, as a LAZY plan — the per-round tree the components loop
     * materializes. The caller passes the edge frame AT the loop's real
     * materialization boundary (a checkpointed scan), so the dumped
-    * exchange count is the loop's, not an inlined-subtree artifact;
-    * exists so plans/r06 can pin the one-exchange-per-star-step shape. */
+    * exchange count is the loop's, not an inlined-subtree artifact.
+    * The loop below runs this plan; the plan dumps and PlanQualitySpec
+    * read the round's shape from it. */
   private[graft] def starRoundPlan(edges: DataFrame): DataFrame =
     smallStar(largeStar(edges))
-
-  /** One min-label-propagation round (neighbor-min aggregate + label
-    * update join) as a LAZY plan over the loop's real inputs — the
-    * PERSISTED pre-partitioned edge list and a checkpointed label
-    * frame; x14's per-round tree, for the same plans/r06 record. */
-  private[graft] def labelPropRoundPlan(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val neighborMin = edges
-      .join(labels.select(col("id").as("id_b"), col("comp").as("ncomp")), Seq("id_b"))
-      .groupBy(col("id_a").as("id"))
-      .agg(min("ncomp").as("nmin"))
-    labels.join(neighborMin, Seq("id"), "left")
-      .select(col("id"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-        (col("nmin") < col("comp")).as("chg"))
-  }
 
   private[graft] def connectedComponentsStarMembersWithRounds(
       pairs: DataFrame): (DataFrame, Set[Int], Int) = {
@@ -605,18 +521,17 @@ object TrainingOps {
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .filter(col("u") =!= col("v")).distinct(),
       eager = false)
-    // try/finally mirrors labelPropagationComponents: the last round's
-    // checkpoint blocks are released on every exit incl. the
-    // non-convergence throw
+    // try/finally: the last round's checkpoint blocks are released on
+    // every exit, the non-convergence throw included
     try {
     var prev = checksum(edges)
     var rounds = 0
     var stable = false
     while (!stable && rounds < 50) {
-      // lazy checkpoint + checksum aggregate = ONE job per round (the
-      // labelPropagation convention, VERDICT r03 next #8): the checksum
-      // is the action that materializes the round's checkpoint blocks
-      val (next, newIds) = trackedCheckpoint(smallStar(largeStar(edges)), eager = false)
+      // lazy checkpoint + checksum aggregate = ONE job per round
+      // (VERDICT r03 next #8): the checksum is the action that
+      // materializes the round's checkpoint blocks
+      val (next, newIds) = trackedCheckpoint(starRoundPlan(edges), eager = false)
       val cur = checksum(next)
       stable = cur == prev
       releaseRdds(next, edgeIds)
@@ -3452,11 +3367,11 @@ object TrainingOps {
 
   /** Link-graph degree histogram over the synthetic doc link graph
     * (x66's edge derivation) — the crawl-graph shape diagnostic that
-    * decides whether PageRank/labelProp passes face hub skew: for each
-    * direction, how many nodes hold each degree. One union-tagged
-    * explode of the edge list, then two map-side-combinable aggregates
-    * (node-degree, then histogram) — the edge list is scanned ONCE for
-    * both directions instead of once per side. */
+    * decides whether PageRank and star-contraction passes face hub
+    * skew: for each direction, how many nodes hold each degree. One
+    * union-tagged explode of the edge list, then two map-side-combinable
+    * aggregates (node-degree, then histogram) — the edge list is scanned
+    * ONCE for both directions instead of once per side. */
   def linkDegreeStats(docs: DataFrame): DataFrame = {
     val tagged = docLinkEdges(docs).select(explode(array(
         struct(col("src").as("id"), lit("out").as("dir")),

@@ -236,36 +236,32 @@ object DumpPlans {
           "broadcast.")
       tc.unpersist()
     }
-    sb.append("## x14_dup_components (iterative)\n\n")
-    sb.append("Components are computed by a driver loop (min-label propagation;\n")
-    sb.append("per-round plan = the x13 pairs feeding an equi-join + groupBy min,\n")
-    sb.append("each round localCheckpoint'd and the superseded round's blocks\n")
-    sb.append("released; since round 4 the changed-count aggregate materializes a\n")
-    sb.append("LAZY checkpoint, so each round is one data traversal, not two).\n")
-    sb.append("The 100 TB upgrade — alternating large-star/small-star\n")
-    sb.append("contraction (two groupBy shuffles per round, O(log n) rounds\n")
-    sb.append("regardless of diameter) — ships as\n")
-    sb.append("`TrainingOps.connectedComponentsStar`, spec-equivalent to the\n")
-    sb.append("min-label iteration on path/star/bridged graphs and on the real\n")
-    sb.append("near-dup graph (ScaleOpsSpec), and since round 4 is ALSO driver-\n")
-    sb.append("registered as x37_dup_components_star under the same recursive-CTE\n")
-    sb.append("oracle as x14. Both fail loudly past their round caps with a\n")
-    sb.append("strong order-independent convergence digest (bit_xor of xxhash64).\n")
-    sb.append("One star round's plan:\n\n")
     locally {
-      import org.apache.spark.sql.functions._
-      val ss = spark
-      import ss.implicits._
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-      val e = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      val nbrs = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = nbrs.groupBy("u").agg(least(min("v"), first("u")).as("m"))
-      val oneRound = nbrs.join(m, Seq("u")).filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")).distinct()
-      sb.append("```\n")
-      sb.append(oneRound.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(4000))
-      sb.append("\n```\n\n")
+      // x14/x37 run a driver loop of star-contraction rounds over
+      // checkpoints, so the public query's plan is a checkpoint scan —
+      // dump the shipped round over a checkpointed edge scan instead,
+      // with auto-broadcast off so the shuffle-join shape is on record
+      val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+      val (edges, edgeIds) = graft.ops.TrainingOps.trackedCheckpoint(
+        spark.range(0, 64).selectExpr("id AS u", "id + 1 AS v"))
+      try dump("x14_dup_components / x37_dup_components_star (one star round)",
+        graft.ops.TrainingOps.starRoundPlan(edges),
+        "Components come from a driver loop of alternating large-star /\n" +
+          "small-star contractions (Kiveris et al. 2014): O(log n) rounds\n" +
+          "whatever the graph's diameter. Each round is this plan: each star\n" +
+          "step repartitions its edges by u once, into defaultParallelism\n" +
+          "partitions, and its aggregate and join share that exchange. The\n" +
+          "round is materialized by a lazy localCheckpoint whose\n" +
+          "convergence digest (count + bit_xor of xxhash64) is the round's\n" +
+          "one job; the superseded round's blocks are released. The loop\n" +
+          "throws past 50 rounds rather than return a partial answer. x14\n" +
+          "and x37 are one engine (`TrainingOps.dupComponents`) under one\n" +
+          "recursive-CTE oracle.")
+      finally {
+        graft.ops.TrainingOps.releaseRdds(edges, edgeIds)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+      }
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")

@@ -61,7 +61,7 @@ object DumpPlansR06 {
           docs.filter(pmod(col("doc_id"), lit(13L)) =!= 0),
           docs.filter(pmod(col("doc_id"), lit(13L)) === 0))
         Some(("cross-corpus near-dup pipeline", df, () => caches.foreach(_.unpersist())))
-      case "x37_dup_components_star" | "x49_canonical_docs" |
+      case "x14_dup_components" | "x37_dup_components_star" | "x49_canonical_docs" |
            "x91_leakage_split" | "x100_dedup_impact" |
            "x104_curate_corpus" | "x109_curation_funnel" =>
         // the loop's PER-ROUND contraction tree (the surface itself is a
@@ -75,27 +75,12 @@ object DumpPlansR06 {
         val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
         // the loop's real input boundary: a checkpointed edge scan
-        val edges = spark.range(0, 64).selectExpr("id AS u", "id + 1 AS v")
-          .localCheckpoint(true)
+        val (edges, edgeIds) = TrainingOps.trackedCheckpoint(
+          spark.range(0, 64).selectExpr("id AS u", "id + 1 AS v"))
         Some(("one large-star + small-star contraction round over the "
           + "checkpointed edge scan, shuffle-join shape",
           TrainingOps.starRoundPlan(edges),
-          () => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)))
-      case "x14_dup_components" =>
-        val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-        // the loop's real inputs: the persisted pre-partitioned edge
-        // list (materialized cache) + a checkpointed label frame
-        val pairs = spark.range(0, 64).selectExpr("id AS id_a", "id + 1 AS id_b")
-        val edges = pairs.union(pairs.selectExpr("id_b AS id_a", "id_a AS id_b"))
-          .repartition(col("id_b")).persist()
-        edges.count()
-        val labels = edges.selectExpr("id_a AS id").distinct()
-          .withColumn("comp", col("id")).localCheckpoint(true)
-        Some(("one min-label-propagation round over the persisted edge "
-          + "cache + checkpointed labels, shuffle-join shape",
-          TrainingOps.labelPropRoundPlan(edges, labels),
-          () => { edges.unpersist()
+          () => { TrainingOps.releaseRdds(edges, edgeIds)
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh) }))
       case _ => None
     }

@@ -836,36 +836,28 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       s"global top-k must not materialize a full sort:\n$p")
   }
 
-  test("x14 round: the persisted edge list is not re-exchanged per label-prop round") {
-    // Round-6: labelPropagationComponents persists its edge list
-    // PRE-PARTITIONED on the probe key (id_b), so every round's
-    // neighbor join reads the cache layout instead of re-shuffling the
-    // edge-scale frame per round (the one-time build exchange lives
-    // inside the InMemoryRelation). Checked under the shuffle-join
-    // regime — at bench scale the join would broadcast and hide the
-    // shape this spec pins.
-    import org.apache.spark.sql.functions._
+  test("star round: every exchange in the contraction round has a fixed partition count") {
+    // x14/x37's loop runs starRoundPlan once per round. A repartition
+    // without a count is advisory (REPARTITION_BY_COL), which AQE may
+    // coalesce or re-plan from run to run; the star steps pin
+    // defaultParallelism instead. Checked over the loop's real input
+    // boundary (a checkpointed edge scan) in the shuffle-join regime —
+    // at this scale every join would otherwise broadcast.
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    val pairs = spark.range(0, 64).selectExpr("id AS id_a", "id + 1 AS id_b")
-    val edges = pairs.union(pairs.selectExpr("id_b AS id_a", "id_a AS id_b"))
-      .repartition(col("id_b")).persist()
+    val (edges, edgeIds) = graft.ops.TrainingOps.trackedCheckpoint(
+      spark.range(0, 64).selectExpr("id AS u", "id + 1 AS v"))
     try {
-      edges.count()
-      val labels = edges.selectExpr("id_a AS id").distinct()
-        .withColumn("comp", col("id")).localCheckpoint(true)
-      val p = graft.ops.TrainingOps.labelPropRoundPlan(edges, labels)
+      val p = graft.ops.TrainingOps.starRoundPlan(edges)
         .queryExecution.executedPlan.toString
-      val lines = p.linesIterator.toSeq
-      val reExchanged = lines.zipWithIndex.exists { case (l, i) =>
-        l.contains("Exchange") && i + 1 < lines.length &&
-          lines(i + 1).contains("InMemoryTableScan")
-      }
-      assert(!reExchanged,
-        s"cached edge list re-exchanged inside the round (per-round edge shuffle):\n$p")
-      assert(p.contains("InMemoryTableScan"), s"round must read the edge cache:\n$p")
+      val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+      assert(!exchanges.exists(_.contains("REPARTITION_BY_COL")),
+        s"a loop-internal exchange has no fixed partition count:\n$p")
+      val n = spark.sparkContext.defaultParallelism
+      assert(exchanges.exists(l => l.contains("REPARTITION_BY_NUM") && l.contains(s", $n)")),
+        s"the star steps must repartition by u into defaultParallelism = $n:\n$p")
     } finally {
-      edges.unpersist()
+      graft.ops.TrainingOps.releaseRdds(edges, edgeIds)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     }
   }

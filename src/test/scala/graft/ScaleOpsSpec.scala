@@ -128,13 +128,31 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"missed ${(expected -- got).take(5)} / extra ${(got -- expected).take(5)}")
   }
 
-  // --- connected components: star contraction ≡ min-label propagation -------
+  // --- connected components: star contraction ≡ JVM union-find ------------
 
-  test("connectedComponentsStar equals labelPropagationComponents on adversarial graphs") {
+  /** Independent truth for the component table: a JVM union-find over
+    * the pair list, one (component = min id, n_docs, max_doc) row per
+    * component of the nodes the pairs name. */
+  private def unionFindComponents(pairs: Seq[(Long, Long)]): Set[(Long, Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.groupBy(find).values
+      .map(ms => (ms.min, ms.size.toLong, ms.max)).toSet
+  }
+
+  private def compsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  test("connectedComponentsStar equals a JVM union-find on adversarial graphs") {
     val ss = spark
     import ss.implicits._
-    def compsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // (1) long path (diameter stress — the case star contraction exists for),
     // (2) two stars bridged at one node, (3) disjoint pairs + a triangle
     val graphs = Seq(
@@ -142,14 +160,13 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((100L, 101L), (100L, 102L), (100L, 103L), (200L, 201L), (200L, 202L), (103L, 200L)),
       Seq((1L, 2L), (3L, 4L), (10L, 11L), (11L, 12L), (12L, 10L)))
     for (g <- graphs) {
-      val pairs = g.toDF("id_a", "id_b")
-      val viaLabels = compsOf(TrainingOps.labelPropagationComponents(pairs))
-      val viaStars = compsOf(TrainingOps.connectedComponentsStar(pairs))
-      assert(viaStars == viaLabels, s"graph $g: stars $viaStars != labels $viaLabels")
+      val viaStars = compsOf(TrainingOps.connectedComponentsStar(g.toDF("id_a", "id_b")))
+      val truth = unionFindComponents(g)
+      assert(viaStars == truth, s"graph $g: stars $viaStars != union-find $truth")
     }
-    // diameter stress at size: a 10,000-node path converges in O(log n)
-    // star rounds where min-label propagation would need 10,000 rounds —
-    // the measured basis of the 100 TB claim
+    // diameter stress at size: a 10,000-node path (diameter 9,999)
+    // converges in O(log n) star rounds — the measured basis of the
+    // 100 TB claim
     val longPath = (1L until 10000L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (comps, rounds) = TrainingOps.connectedComponentsStarWithRounds(longPath)
     val c = comps.collect()
@@ -160,10 +177,10 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and on the real near-dup graph
     val docs = spark.read.parquet(s"$sfMid/documents.parquet")
     val realPairs = TrainingOps.jaccardNearDupPairs(docs).select("id_a", "id_b")
-    val viaLabels = compsOf(TrainingOps.labelPropagationComponents(realPairs))
-    val viaStars = compsOf(TrainingOps.connectedComponentsStar(realPairs))
-    assert(viaStars == viaLabels)
-    assert(viaLabels.nonEmpty)
+    val truth = unionFindComponents(
+      realPairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    assert(compsOf(TrainingOps.connectedComponentsStar(realPairs)) == truth)
+    assert(truth.nonEmpty)
   }
 
   // --- IVF: honest recall ---------------------------------------------------
@@ -668,21 +685,41 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(recall >= 0.9, s"PQ recall@20 = $recall < 0.9")
   }
 
-  // --- round-4: component ops fail loudly past their round caps ------------
+  // --- dup components on a near-dup chain longer than 50 edits ------------
 
-  test("labelPropagationComponents throws past the 50-round cap; star handles the same graph") {
+  test("dupComponents labels a near-dup edit chain of diameter > 50 (union-find truth)") {
     val ss = spark
     import ss.implicits._
-    // a 56-hop path needs 55 min-label rounds \u2014 over the cap. The old
-    // behavior silently returned HALF-PROPAGATED labels (a wrong
-    // answer); now it fails loudly and names the O(log n) alternative.
-    val longPath = (1L to 56L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ex = intercept[IllegalStateException](
-      TrainingOps.labelPropagationComponents(longPath).collect())
-    assert(ex.getMessage.contains("connectedComponentsStar"))
-    val c = TrainingOps.connectedComponentsStar(longPath).collect()
-    assert(c.length == 1 && c.head.getLong(1) == 57L,
-      s"star must solve the same path: ${c.toSeq}")
+    // 200 documents, each one random character edit from the previous
+    // one: at threshold 0.97 every document is a near-dup of its
+    // neighbors a few edits away, so the pair graph is one long chain
+    // whose diameter exceeds 50 — the length at which a component
+    // engine needing O(diameter) rounds would hit a 50-round cap
+    val rnd = new scala.util.Random(20260)
+    val texts = Iterator.iterate(Array.fill(2000)(('a' + rnd.nextInt(26)).toChar)) { prev =>
+      val next = prev.clone()
+      next(rnd.nextInt(next.length)) = ('a' + rnd.nextInt(26)).toChar
+      next
+    }.take(200).map(new String(_)).toSeq
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val pairs = TrainingOps.jaccardNearDupPairs(docs, 0.97).select("id_a", "id_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // graph diameter by a BFS from every node
+    val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+    def eccentricity(src: Long): Int = {
+      val dist = scala.collection.mutable.Map(src -> 0)
+      val queue = scala.collection.mutable.Queue(src)
+      while (queue.nonEmpty) {
+        val u = queue.dequeue()
+        adj(u).foreach(v => if (!dist.contains(v)) { dist(v) = dist(u) + 1; queue.enqueue(v) })
+      }
+      dist.values.max
+    }
+    val diameter = adj.keys.map(eccentricity).max
+    assert(diameter > 50, s"chain diameter $diameter must exceed 50 to exercise long chains")
+    val got = compsOf(TrainingOps.dupComponents(docs, 0.97))
+    assert(got == unionFindComponents(pairs),
+      s"dupComponents ${got.take(5)} != union-find over ${pairs.size} pairs")
   }
 
   // --- round-4: x02 committed golden staleness guard -----------------------
